@@ -60,8 +60,24 @@ object SparkEntry {
       // small-fanout special case (same class as the pinned
       // spark.buffer.pageSize above).
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
+      // Generated-class cache size PINNED above the engine's working set
+      // (perfbench, 4 cores): one etl_month pass generates ~240 distinct
+      // classes and one query_mix pass 120-143, against Spark's default
+      // cache of 100. A cyclic working set larger than an LRU cache
+      // misses on every lookup, so at the default every warm pass
+      // recompiled every whole-stage class (etl_month: 241 Janino
+      // compiles, 4.2 s of compile plus 21 s of JIT out of 34 cpu-s).
+      // 1000 is 4x the largest measured set; a retained entry costs
+      // ~45 KB of heap, ~45 MB when full. Spark reads this static conf
+      // ONCE per JVM, when CodeGenerator is first initialized, so it only
+      // takes effect if set on the first session the JVM builds.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries.toString)
       .getOrCreate()
   }
+
+  /** `spark.sql.codegen.cache.maxEntries` of the harness and test
+    * sessions; see the pin in [[harnessSession]]. */
+  val CodegenCacheMaxEntries: Int = 1000
 
   private val modules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
     Seq(

@@ -93,12 +93,7 @@ object Pipeline {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse(
       s"${sys.props("java.io.tmpdir")}/graft_pipeline_out")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.harnessSession()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, outDir).foreach { r =>
       println(f"[pipeline] ${r.name}%-22s ok=${r.ok} rows=${r.rows}${r.error.map(" err=" + _).getOrElse("")}")

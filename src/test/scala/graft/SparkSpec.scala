@@ -43,6 +43,7 @@ object SparkSpec {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", SparkEntry.CodegenCacheMaxEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
