@@ -173,7 +173,7 @@ object ScaleUp {
     *
     * `files` (optional) coalesces each output table to that many parquet
     * files — `1` produces the single-split layout the sweep mirrors
-    * require ([[NullSweep.singleSplit]]'s reproducible-row-id
+    * require ([[SweepAll.singleSplit]]'s reproducible-row-id
     * precondition), so the robustness rails can run at scale
     * (round-17 judge item 5). */
   def main(args: Array[String]): Unit = {

@@ -122,18 +122,6 @@ object SessionCache {
   def rebuiltAfterRelease(s: SparkSession): Seq[String] =
     Option(rebuiltKeys.get(s)).map(_.toSeq).getOrElse(Seq.empty)
 
-  /** Non-building lookup: the cached value for `key` if a builder has
-    * already produced one, else None. For diagnostics (Probe's plan
-    * dumps) that must never trigger — or crash on the absence of — a
-    * build (round-17 ADVICE: the probe sys.error'd on a missing key
-    * after its measurements were already taken). */
-  def peek[T](s: SparkSession, key: String): Option[T] = {
-    val lock = locks.computeIfAbsent(s, _ => new java.util.concurrent.locks.ReentrantLock())
-    lock.lock()
-    try Option(maps.get(s)).flatMap(_.get(key)).map(_.asInstanceOf[T])
-    finally lock.unlock()
-  }
-
   /** Unpersist and drop the session's entries whose key matches `pred`
     * — the family-scoped release the Bench loop uses so the d-family
     * never pays memory pressure for the c-family's corpus-sized frames.

@@ -3,10 +3,10 @@ package graft
 /** The DUPLICATE-ROW robustness rail: queries must complete (possibly
   * with different rows — replayed records are data) and never throw
   * when ~1/7 of input rows arrive twice, the at-least-once-delivery
-  * regime the key-unique gate tables never exercise. `graft.DupSweep`
-  * sweeps the full 244-query surface; this spec pins the contract in
-  * CI on the duplicate-riskiest subset: operators that ASSUME key
-  * uniqueness somewhere in their contract.
+  * regime the key-unique gate tables never exercise. The `dup` rail of
+  * `graft.SweepAll` sweeps the full query surface; this spec pins the
+  * contract in CI on the duplicate-riskiest subset: operators that
+  * ASSUME key uniqueness somewhere in their contract.
   */
 class DupInputSpec extends SparkSpec {
 
@@ -25,7 +25,7 @@ class DupInputSpec extends SparkSpec {
 
   test("duplicate-riskiest queries complete without throwing on a row-replayed mirror") {
     val mirror = "target/scratch/sf_dup_spec"
-    DupSweep.mirrorDuped(spark, sfDir, mirror, rate = 7)
+    SweepAll.mirrorDuped(spark, sfDir, mirror, rate = 7)
     val failed = risky.flatMap { n =>
       try { SparkEntry.queries(n)(spark, mirror).collect(); None }
       catch {
@@ -40,7 +40,7 @@ class DupInputSpec extends SparkSpec {
 
   test("the duped mirror actually carries duplicates (the regime is real)") {
     val mirror = "target/scratch/sf_dup_spec"
-    DupSweep.mirrorDuped(spark, sfDir, mirror, rate = 7)
+    SweepAll.mirrorDuped(spark, sfDir, mirror, rate = 7)
     val docs = Tables.load(spark, mirror, "documents")
     val total = docs.count()
     val distinct = docs.distinct().count()

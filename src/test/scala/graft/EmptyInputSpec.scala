@@ -13,14 +13,14 @@ package graft
   * executor-side null discipline covers it, and a single sweep over
   * the whole surface is the cheapest complete detector (the round-14
   * sweep found 8: g01/g02 driver scalars, s11/s15/s18/s21 empty-sink
-  * schema inference, dq04/v12 ANSI divide-by-zero). `graft.EmptySweep`
-  * is the standalone diagnostic twin of this test.
+  * schema inference, dq04/v12 ANSI divide-by-zero). The `empty` rail of
+  * `graft.SweepAll` is the standalone diagnostic twin of this test.
   */
 class EmptyInputSpec extends SparkSpec {
 
   test("every SparkEntry query runs to completion on zero-row tables") {
     val emptyDir = "target/scratch/sf0_spec"
-    EmptySweep.mirrorEmpty(spark, sfDir, emptyDir)
+    SweepAll.mirrorEmpty(spark, sfDir, emptyDir)
     val failed = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (n, fn) =>
       try { fn(spark, emptyDir).collect(); None }
       catch {

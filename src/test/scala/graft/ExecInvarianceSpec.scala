@@ -3,9 +3,9 @@ package graft
 /** The EXECUTION-CONFIG invariance rail: results must not depend on
   * shuffle fan-out, join strategy, or adaptive re-planning — the
   * session knobs that differ between the gate's fixed local config and
-  * any real cluster deployment. `graft.ExecSweep` sweeps the full
-  * 244-query surface; this spec pins the contract in CI on the
-  * config-riskiest subset — every mechanism whose implementation
+  * any real cluster deployment. The `exec` rail of `graft.SweepAll`
+  * sweeps the full query surface; this spec pins the contract in CI on
+  * the config-riskiest subset — every mechanism whose implementation
   * could see the partition topology.
   */
 class ExecInvarianceSpec extends SparkSpec {
@@ -30,10 +30,11 @@ class ExecInvarianceSpec extends SparkSpec {
     "e04_stream_hourly")
 
   test("results are invariant under a cluster-like session config") {
-    val alt = ExecSweep.clusterLike(spark)
+    val alt = SweepAll.clusterLike(spark)
     try {
       val failed = risky.flatMap { n =>
-        ExecSweep.verdict(spark, alt, n, sfDir).map(why => s"$n: $why")
+        SweepAll.verdict(SparkEntry.queries(n), Seq(spark -> sfDir, alt -> sfDir))
+          .left.toOption.map(why => s"$n: $why")
       }
       assert(failed.isEmpty,
         s"${failed.size} queries are config-sensitive:\n" + failed.mkString("\n"))

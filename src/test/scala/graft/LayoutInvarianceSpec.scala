@@ -4,11 +4,11 @@ package graft
   * the input tables are split into files — the property that lets the
   * same query run on the gate's single-split parquet and on a
   * 1000-executor cluster's many-thousand-split layout and publish the
-  * same rows. `graft.LayoutSweep` sweeps the full 244-query surface;
-  * this spec pins the contract in CI on the layout-riskiest subset —
-  * every query family whose implementation touches partition ids,
-  * physical row order, top-k cuts, sampling permutations, file-level
-  * artifacts, or iterated driver loops.
+  * same rows. The `layout` rail of `graft.SweepAll` sweeps the full
+  * query surface; this spec pins the contract in CI on the
+  * layout-riskiest subset — every query family whose implementation
+  * touches partition ids, physical row order, top-k cuts, sampling
+  * permutations, file-level artifacts, or iterated driver loops.
   */
 class LayoutInvarianceSpec extends SparkSpec {
 
@@ -29,9 +29,10 @@ class LayoutInvarianceSpec extends SparkSpec {
 
   test("results are invariant under a multi-split rewrite of every table") {
     val mirror = "target/scratch/sf_layout_spec"
-    LayoutSweep.mirrorSplit(spark, sfDir, mirror, splits = 7)
+    SweepAll.mirrorSplit(spark, sfDir, mirror, splits = 7)
     val failed = risky.flatMap { n =>
-      LayoutSweep.verdict(spark, n, sfDir, mirror).map(why => s"$n: $why")
+      SweepAll.verdict(SparkEntry.queries(n), Seq(spark -> sfDir, spark -> mirror))
+        .left.toOption.map(why => s"$n: $why")
     }
     SessionCache.release(spark, _.contains(mirror))
     assert(failed.isEmpty,

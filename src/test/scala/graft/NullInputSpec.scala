@@ -3,9 +3,9 @@ package graft
 /** The NULL-INJECTION robustness rail: queries must complete (possibly
   * with different rows — nulls are data) and never throw when optional
   * fields carry nulls, the regime the essentially-null-free gate
-  * tables never exercise. `graft.NullSweep` sweeps the full 244-query
-  * surface; this spec pins the contract in CI on the null-riskiest
-  * subset.
+  * tables never exercise. The `null` rail of `graft.SweepAll` sweeps
+  * the full query surface; this spec pins the contract in CI on the
+  * null-riskiest subset.
   */
 class NullInputSpec extends SparkSpec {
 
@@ -26,7 +26,7 @@ class NullInputSpec extends SparkSpec {
 
   test("null-riskiest queries complete without throwing on a null-injected mirror") {
     val mirror = "target/scratch/sf_null_spec"
-    NullSweep.mirrorNulled(spark, sfDir, mirror, rate = 7)
+    SweepAll.mirrorNulled(spark, sfDir, mirror, rate = 7)
     val failed = risky.flatMap { n =>
       try { SparkEntry.queries(n)(spark, mirror).collect(); None }
       catch {

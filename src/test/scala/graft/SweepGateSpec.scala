@@ -73,4 +73,12 @@ class SweepGateSpec extends AnyFunSuite {
     assert(SweepReport.railNames ===
       Seq("empty", "null", "fuzz", "layout", "exec", "dup"))
   }
+
+  test("check.py's SWEEP_NAMES list equals railNames") {
+    val src = java.nio.file.Files.readString(java.nio.file.Paths.get("tools/check.py"))
+    val list = """(?m)^SWEEP_NAMES\s*=\s*\[([^\]]*)\]""".r.findFirstMatchIn(src)
+    assert(list.isDefined, "tools/check.py defines no SWEEP_NAMES list")
+    val names = """["']([^"']*)["']""".r.findAllMatchIn(list.get.group(1)).map(_.group(1)).toSeq
+    assert(names === SweepReport.railNames)
+  }
 }

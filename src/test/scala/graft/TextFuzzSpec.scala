@@ -4,8 +4,8 @@ package graft
   * data — surrogate pairs, bidi controls, zero-width code points,
   * embedded delimiters/newlines, quotes, regex metacharacters and
   * multi-KB runs may change results but must never throw.
-  * `graft.TextFuzzSweep` sweeps the full 244-query surface; this spec
-  * pins the contract in CI on the text-riskiest subset.
+  * The `fuzz` rail of `graft.SweepAll` sweeps the full query surface;
+  * this spec pins the contract in CI on the text-riskiest subset.
   */
 class TextFuzzSpec extends SparkSpec {
 
@@ -27,7 +27,7 @@ class TextFuzzSpec extends SparkSpec {
 
   test("text-riskiest queries complete without throwing on an adversarial-text mirror") {
     val mirror = "target/scratch/sf_fuzz_spec"
-    TextFuzzSweep.mirrorFuzzed(spark, sfDir, mirror, rate = 7)
+    SweepAll.mirrorFuzzed(spark, sfDir, mirror, rate = 7)
     val failed = risky.flatMap { n =>
       try { SparkEntry.queries(n)(spark, mirror).collect(); None }
       catch {
